@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .util import persisted_rdd_ids, release_rdds
+
 
 def _large_star(edges: DataFrame) -> DataFrame:
     """(u,v) symmetric → for each u: m = min(N(u) ∪ {u}); emit (v, m) for
@@ -45,24 +47,6 @@ def _small_star(edges: DataFrame) -> DataFrame:
         joined.select(F.col("u"), F.col("m").alias("v"))
     )
     return out.filter(F.col("u") != F.col("v")).distinct()
-
-
-def _persistent_rdd_ids(sc) -> set:
-    """Ids of RDDs currently holding persisted/localCheckpoint blocks
-    (JVM-side registry — the only handle that can release checkpoint
-    blocks; same access pattern as bench._persistent_ids)."""
-    it = sc._jsc.sc().getPersistentRDDs().keysIterator()
-    ids = set()
-    while it.hasNext():
-        ids.add(it.next())
-    return ids
-
-
-def _release_rdds(sc, rdd_ids: set) -> None:
-    m = sc._jsc.sc().getPersistentRDDs()
-    for rdd_id in rdd_ids:
-        if m.contains(rdd_id):
-            m.apply(rdd_id).unpersist(False)
 
 
 def _fingerprint(edges: DataFrame) -> tuple:
@@ -94,7 +78,7 @@ def connected_components(
         raise ValueError(
             f"checkpoint_every must be >= 1, got {checkpoint_every}"
         )
-    sc = edges.sparkSession.sparkContext
+    spark = edges.sparkSession
     cur = edges.select("u", "v").filter(F.col("u") != F.col("v")).distinct()
     prev_fp = None
     prev_block_ids: set = set()
@@ -105,7 +89,7 @@ def connected_components(
             # materializing action, so each round costs ONE Spark job
             # (compute + checkpoint + convergence check together) instead
             # of an eager-checkpoint job plus a fingerprint job.
-            before = _persistent_rdd_ids(sc)
+            before = persisted_rdd_ids(spark)
             cur = cur.localCheckpoint(eager=False)
             fp = _fingerprint(cur)
             # round i's blocks are live now, so round i-1's checkpoint is
@@ -116,8 +100,8 @@ def connected_components(
             # this repo's measured ~30 GB heap-growth failure mode).  The
             # FINAL round's blocks stay live: the returned labels read
             # them and a truncated lineage cannot recompute.
-            _release_rdds(sc, prev_block_ids)
-            prev_block_ids = _persistent_rdd_ids(sc) - before
+            release_rdds(spark, prev_block_ids)
+            prev_block_ids = persisted_rdd_ids(spark) - before
         else:
             fp = _fingerprint(cur)
         if fp == prev_fp:

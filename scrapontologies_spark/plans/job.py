@@ -1,7 +1,8 @@
 """Resumable KG-construction job: the spark-submit entry point.
 
-Stage DAG (each boundary = warehouse checkpoint + manifest + metrics row,
-so a killed run resumes mid-pipeline with identical output — north_rule):
+Stage DAG (each boundary = warehouse checkpoint + a manifest marker that
+holds the stage's per-file lineage and metrics, so a killed run resumes
+mid-pipeline with identical output — north_rule):
 
   corpus → chunks → {triples_raw, doc_entities, doc_schemas, global_schema}
          → entities (modules ∪ symbols, reconciled against any existing

@@ -1,15 +1,15 @@
 """Stage DAG of the KG-construction job (SURVEY §3 EP1+EP2 re-expression).
 
-corpus → chunk+extract (mapInPandas, fused, no shuffle)
-       → triples        (JVM explode + distinct)
-       → per-doc fold   (applyInPandas over groupBy(repo,path))  [A2/A3]
-       → entities       (module + symbol entities, reconciled)    [M4/M6]
-       → schemas        (per-doc union + tree-reduced global)     [A4/A5]
+corpus → fused extract (ONE narrow mapInPandas, no shuffle: chunks with
+         their mentions, per-doc A2/A3 fold, A4 schema union, M5 triples
+         as tall rows keyed by ``kind``)
+       → views          (JVM-side filters of the tall rows)
+       → entities       (module ∪ symbol entities)                [M4]
+       → global schema  (tree reduce of the per-doc schemas)      [A5]
 
-Each stage returns a DataFrame; ``run_pipeline`` wires them and (optionally)
-checkpoints stage outputs through the warehouse (sources/io.py) for
-resumability.  The reference's langgraph node DAGs (pdf_parser.py:161-244)
-map 1:1 onto these stages (SURVEY §2.9 O1-O4).
+``run_pipeline`` wires them; the resumable job (plans/job.py) checkpoints
+the same views as warehouse stages.  The reference's langgraph node DAGs
+(pdf_parser.py:161-244) map 1:1 onto these stages (SURVEY §2.9 O1-O4).
 """
 
 from __future__ import annotations

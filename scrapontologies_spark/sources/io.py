@@ -11,21 +11,25 @@ Format: parquet in this sandbox; the writer goes through ``format(...)`` so
 an Iceberg catalog (``df.writeTo(table).using("iceberg")``) is a config
 switch, not a rewrite — no Iceberg jars ship in this container.
 
-Metrics: one row per completed stage (stage, rows, wall_ms, fingerprint)
-under ``_metrics/stage=<name>`` (overwritten per attempt — a crashed
-attempt leaves no orphan rows); fingerprint is an order-independent
-MODULAR SUM of row hashes (Σ xxhash64(row) mod 2⁶³), so cross-run output
-equality is checkable without a diff.  Sum, not xor: xor cancels rows with
-even multiplicity, so {A,A,C} and {B,B,C} would collide — exactly the
-duplication bugs a dedup engine's fingerprint must catch.
+Commit: the manifest marker ``_manifest/<name>.json``, written with
+``os.replace`` after the data, is the commit point.  Besides the config
+token it holds the stage's metrics (rows, wall_ms, fingerprint) and its
+per-file lineage — the per-partition lineage rows of the north_rule; the
+file is the durable partition unit a restarted reader re-reads.  Both come
+from ONE read-back job (``groupBy(input_file_name())`` → count,
+fingerprint, collected to the driver, which folds the totals from the same
+rows), so they cannot disagree, and a crash before the commit leaves no
+row anywhere.  ``metrics()``/``lineage()`` are DataFrames over the
+markers, which are driver-local like the root (``Warehouse.__init__``).
+A marker written before lineage moved into it has no ``lineage`` key: it
+resumes and contributes no lineage rows; the ``_lineage/``/``_metrics/``
+tables such runs wrote are ignored.
 
-Lineage: one row per checkpoint FILE under ``_lineage/stage=<name>`` —
-the per-partition lineage rows of the north_rule.  The file is the durable
-partition unit (what a restarted reader re-reads); stage totals are
-derived from the same aggregation (count sums; the modular sum is
-associative), so lineage and metrics can never disagree.  Per-stage
-overwrite means a retry after a crash between lineage write and marker
-commit replaces the orphan rows instead of appending next to them.
+The fingerprint is an order-independent MODULAR SUM of row hashes
+(Σ xxhash64(row) mod 2⁶³), so cross-run output equality is checkable
+without a diff.  Sum, not xor: xor cancels rows with even multiplicity, so
+{A,A,C} and {B,B,C} would collide — exactly the duplication bugs a dedup
+engine's fingerprint must catch.
 
 Resume is guarded by a CONFIG TOKEN: ``run_stage(..., config=...)`` stores
 a canonical-JSON token in the stage marker and rebuilds when the stored
@@ -129,7 +133,19 @@ class Warehouse:
             return False
         return config_token is None or meta.get("config") == config_token
 
-    def _commit(self, info: StageInfo, config_token: Optional[str] = None) -> None:
+    def _markers(self) -> list:
+        """Every committed marker (an unfinished commit's ``.tmp`` is not)."""
+        d = f"{self.root}/_manifest"
+        out = []
+        for fn in sorted(os.listdir(d)):
+            if fn.endswith(".json"):
+                with open(f"{d}/{fn}") as f:
+                    out.append(json.load(f))
+        return out
+
+    def _commit(
+        self, info: StageInfo, lineage: list, config_token: Optional[str]
+    ) -> None:
         tmp = self._marker(info.name) + ".tmp"
         with open(tmp, "w") as f:
             json.dump(
@@ -139,6 +155,7 @@ class Warehouse:
                     "wall_ms": info.wall_ms,
                     "fingerprint": info.fingerprint,
                     "config": config_token,
+                    "lineage": lineage,
                 },
                 f,
             )
@@ -156,6 +173,10 @@ class Warehouse:
         partition_by: Optional[Iterable[str]] = None,
         config_token: Optional[str] = None,
     ) -> StageInfo:
+        return self._write_stage(df, name, partition_by, config_token)[1]
+
+    def _write_stage(self, df, name, partition_by, config_token):
+        """Write, read back once, commit; returns (read-back frame, info)."""
         t0 = time.monotonic()
         # invalidate any prior marker BEFORE touching the data: a rebuild
         # that crashes mid-overwrite must leave the stage "incomplete" —
@@ -171,15 +192,11 @@ class Warehouse:
         if pb:
             w = w.partitionBy(*pb)
         w.save(self.path(name))
-        spark = df.sparkSession
-        out = spark.read.format(self.fmt).load(self.path(name))
-        # per-file lineage rows; stage totals fold out of the SAME rows
-        # (count sums; the modular hash-sum is associative), so _lineage
-        # and _metrics cannot disagree.  Per-file fingerprint = Σ
-        # xxhash64(row) mod 2⁶³ — multiplicity-sensitive where bit_xor
-        # cancels even-multiplicity rows (see module docstring); summed as
-        # decimal so the bigint sum cannot overflow under ANSI mode.
-        lin = (
+        out = self.read_stage(df.sparkSession, name)
+        # the ONE read-back job: per-file lineage rows; per-file
+        # fingerprint = Σ xxhash64(row) mod 2⁶³, summed as decimal so the
+        # bigint sum cannot overflow under ANSI mode
+        files = (
             out.groupBy(F.input_file_name().alias("file"))
             .agg(
                 F.count("*").alias("rows"),
@@ -190,34 +207,17 @@ class Warehouse:
                 .cast("long")
                 .alias("fingerprint"),
             )
-            .persist()
+            .collect()
         )
-        # per-stage partition dir, OVERWRITTEN per attempt: a crash between
-        # this write and the marker commit leaves rows a retry replaces,
-        # never orphans appended next to live rows.  Readers recover the
-        # `stage` column from partition discovery.
-        lin.write.mode("overwrite").format(self.fmt).save(
-            f"{self.root}/_lineage/stage={name}"
-        )
-        agg = lin.agg(
-            F.sum("rows").alias("n"),
-            F.pmod(
-                F.sum(F.col("fingerprint").cast("decimal(38,0)")),
-                F.lit(str(_FP_MOD)).cast("decimal(38,0)"),
-            )
-            .cast("long")
-            .alias("h"),
-        ).collect()[0]
-        lin.unpersist()
+        lineage = sorted((r.asDict() for r in files), key=lambda r: r["file"])
         info = StageInfo(
             name=name,
-            rows=agg["n"] if agg["n"] is not None else 0,
+            rows=sum(r["rows"] for r in lineage),
             wall_ms=int((time.monotonic() - t0) * 1000),
-            fingerprint=agg["h"] if agg["h"] is not None else 0,
+            fingerprint=sum(r["fingerprint"] for r in lineage) % _FP_MOD,
         )
-        self._append_metrics(spark, info)
-        self._commit(info, config_token)
-        return info
+        self._commit(info, lineage, config_token)
+        return out, info
 
     def write_bucketed(
         self,
@@ -251,19 +251,22 @@ class Warehouse:
     def read_stage(self, spark: SparkSession, name: str) -> DataFrame:
         return spark.read.format(self.fmt).load(self.path(name))
 
-    def _append_metrics(self, spark: SparkSession, info: StageInfo) -> None:
-        row = [(info.rows, info.wall_ms, info.fingerprint)]
-        spark.createDataFrame(
-            row, "rows long, wall_ms long, fingerprint long"
-        ).write.mode("overwrite").format(self.fmt).save(
-            f"{self.root}/_metrics/stage={info.name}"
+    def metrics(self, spark: SparkSession) -> DataFrame:
+        """One row per committed stage, from the manifest markers."""
+        return spark.createDataFrame(
+            [(m["rows"], m["wall_ms"], m["fingerprint"], m["stage"])
+             for m in self._markers()],
+            "rows long, wall_ms long, fingerprint long, stage string",
         )
 
-    def metrics(self, spark: SparkSession) -> DataFrame:
-        return spark.read.format(self.fmt).load(f"{self.root}/_metrics")
-
     def lineage(self, spark: SparkSession) -> DataFrame:
-        return spark.read.format(self.fmt).load(f"{self.root}/_lineage")
+        """One row per checkpoint file of each committed stage, from the
+        manifest markers."""
+        return spark.createDataFrame(
+            [(f["file"], f["rows"], f["fingerprint"], m["stage"])
+             for m in self._markers() for f in m.get("lineage", [])],
+            "file string, rows long, fingerprint long, stage string",
+        )
 
     # -- resumable orchestration ----------------------------------------------
 
@@ -305,9 +308,8 @@ class Warehouse:
         if stage_observer is not None:
             stage_observer(name, "start")
         try:
-            info = self.write_stage(build(), name, pb, config_token=token)
+            return self._write_stage(build(), name, pb, token)
         finally:
             if stage_observer is not None:
                 stage_observer(name, "end")
             spark.sparkContext.setJobDescription(None)
-        return self.read_stage(spark, name), info

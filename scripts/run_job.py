@@ -11,8 +11,10 @@ Usage:
 generating the synthetic one; without it, n_docs synthetic documents.
 
 Runs corpus → fused extract → triples/entities/schemas through the
-resumable Warehouse (manifest + per-file lineage + metrics); re-running
-with the same root skips completed stages (plans/job.py).
+resumable Warehouse; each stage's manifest marker
+(<warehouse_root>/_manifest/<stage>.json) holds its per-file lineage and
+metrics, and re-running with the same root skips completed stages
+(plans/job.py).
 """
 
 from __future__ import annotations

@@ -334,16 +334,15 @@ def test_cc_releases_superseded_round_checkpoints(spark):
     accumulating one block set per round is this repo's measured ~30 GB
     heap-growth failure mode).  The FINAL round's blocks stay live: the
     returned labels read them."""
-    from scrapontologies_spark.operators.cc import _persistent_rdd_ids
+    from scrapontologies_spark.operators.util import persisted_rdd_ids
 
-    sc = spark.sparkContext
-    before = _persistent_rdd_ids(sc)
+    before = persisted_rdd_ids(spark)
     # a path graph needs several LS/SS rounds
     edges = spark.createDataFrame(
         [(f"n{i:02d}", f"n{i+1:02d}") for i in range(40)], "u string, v string"
     )
     labels = connected_components(edges)
     assert labels.count() == 41
-    leaked = _persistent_rdd_ids(sc) - before
+    leaked = persisted_rdd_ids(spark) - before
     # at most the final round's checkpoint survives (it backs `labels`)
     assert len(leaked) <= 1, leaked

@@ -396,3 +396,122 @@ def test_file_uri_warehouse_root_resolves_to_posix(spark, tmp_path):
     assert Warehouse(posix_root).is_complete("s")
     with pytest.raises(NotImplementedError):
         Warehouse("file://otherhost/data/wh")
+
+
+def _job_ids(spark, fn) -> list:
+    """Ids of the Spark jobs ``fn`` runs, counted with a job group and the
+    status tracker once the listener bus has delivered every job event."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"job-budget-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_stage_commit_job_budget(spark, tmp_path):
+    """A built stage runs its data write plus ONE read-back query (the
+    load's schema inference and the per-file lineage aggregation) and
+    writes nothing under _lineage/ or _metrics/: lineage and metrics go
+    into the manifest marker.  A skipped stage runs only its load."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    df = spark.range(0, 1000, numPartitions=3).selectExpr(
+        "id", "CAST(id % 7 AS string) AS k"
+    )
+    plain = str(tmp_path / "plain")
+    write = _job_ids(spark, lambda: df.write.format("parquet").save(plain))
+
+    def read_back():
+        out = spark.read.format("parquet").load(plain)
+        out.groupBy(F.input_file_name()).agg(F.count("*")).collect()
+
+    read = _job_ids(spark, read_back)
+    load = _job_ids(spark, lambda: spark.read.format("parquet").load(plain))
+
+    wh = Warehouse(str(tmp_path / "wh"))
+    built = _job_ids(spark, lambda: wh.run_stage(spark, "s", lambda: df, config={"k": 1}))
+    assert len(built) == len(write) + len(read), (built, write, read)
+    assert not os.path.exists(f"{wh.root}/_lineage")
+    assert not os.path.exists(f"{wh.root}/_metrics")
+
+    skipped = _job_ids(spark, lambda: wh.run_stage(spark, "s", lambda: df, config={"k": 1}))
+    assert len(skipped) == len(load) == 1
+
+
+def test_crash_before_commit_leaves_no_rows_and_rebuilds(
+    spark, corpus, tmp_path, monkeypatch
+):
+    """A crash after a stage's data write but before its marker commit
+    leaves no metrics or lineage row for that stage (both live in the
+    marker), and the re-run rebuilds it with a clean run's fingerprint."""
+    clean = run_job(spark, corpus, str(tmp_path / "clean"), chunk_bytes=512,
+                    with_cc=False, with_schemas=False)
+
+    class Boom(RuntimeError):
+        pass
+
+    real_commit = Warehouse._commit
+
+    def dying_commit(self, info, *args, **kwargs):
+        if info.name == "entities":
+            raise Boom()
+        return real_commit(self, info, *args, **kwargs)
+
+    root = str(tmp_path / "wh")
+    monkeypatch.setattr(Warehouse, "_commit", dying_commit)
+    with pytest.raises(Boom):
+        run_job(spark, corpus, root, chunk_bytes=512, with_cc=False,
+                with_schemas=False)
+    monkeypatch.undo()
+
+    wh = Warehouse(root)
+    committed = {"extracted", "triples_raw", "doc_entities"}
+    assert {r.stage for r in wh.metrics(spark).collect()} == committed
+    assert {r.stage for r in wh.lineage(spark).collect()} == committed
+
+    again = run_job(spark, corpus, root, chunk_bytes=512, with_cc=False,
+                    with_schemas=False)
+    assert {k for k, v in again.items() if v.skipped} == committed
+    assert {k: (v.rows, v.fingerprint) for k, v in again.items()} == {
+        k: (v.rows, v.fingerprint) for k, v in clean.items()
+    }
+
+
+def test_marker_without_lineage_resumes(spark, corpus, tmp_path):
+    """A marker written before lineage moved into it (no ``lineage`` key)
+    still resumes and contributes no lineage rows; the _lineage/ and
+    _metrics/ tables such runs wrote are ignored."""
+    import json
+
+    root = str(tmp_path / "wh")
+    first = run_job(spark, corpus, root, chunk_bytes=512, with_cc=False,
+                    with_schemas=False)
+    marker = f"{root}/_manifest/extracted.json"
+    with open(marker) as f:
+        meta = json.load(f)
+    del meta["lineage"]
+    with open(marker, "w") as f:
+        json.dump(meta, f)
+    spark.createDataFrame([("stale", 1, 1)], "file string, rows long, fingerprint long") \
+        .write.parquet(f"{root}/_lineage/stage=extracted")
+    spark.createDataFrame([(1, 1, 1)], "rows long, wall_ms long, fingerprint long") \
+        .write.parquet(f"{root}/_metrics/stage=extracted")
+
+    again = run_job(spark, corpus, root, chunk_bytes=512, with_cc=False,
+                    with_schemas=False)
+    assert all(info.skipped for info in again.values())
+    assert {k: v.fingerprint for k, v in again.items()} == {
+        k: v.fingerprint for k, v in first.items()
+    }
+    wh = Warehouse(root)
+    assert {r.stage for r in wh.lineage(spark).collect()} == set(first) - {"extracted"}
+    metrics = {r.stage: (r.rows, r.fingerprint) for r in wh.metrics(spark).collect()}
+    assert metrics == {k: (v.rows, v.fingerprint) for k, v in first.items()}
