@@ -770,9 +770,10 @@ _RB_TERM_OK = re.compile(r"[A-Z_]\w*\Z", re.ASCII)
 _SH_TERM_OK = re.compile(r"[A-Za-z_]\w*\Z", re.ASCII)
 # shell: '#' is a comment only at line start / after whitespace (never
 # inside ${#var}); heredoc openers share the ruby branch (same group
-# structure — quote group then tag), tags may be lowercase
+# structure — quote group then tag), tags may be lowercase; a third '<'
+# makes a bash here-string (`<<<"word"`), which has no terminator line
 _SH_MASK_TOK = re.compile(
-    r"(?:(?<=\s)|^)#|[\"']|<<-?(['\"]?)([A-Za-z_]\w*)\1", re.M
+    r"(?:(?<=\s)|^)#|[\"']|(?<!<)<<-?(['\"]?)([A-Za-z_]\w*)\1", re.M
 )
 # toml: '#' comments, multi-line basic/literal strings reuse the
 # triple-quote branch, single-line strings skip like everywhere else
@@ -810,7 +811,8 @@ _MASK_PROBES = {
     "go": ("/*", "`"),
     "java": ("/*", '"""'),
     "rust": ("/*", 'r"', '#"'),
-    "c": ("/*", "\\\n", "#if", "# if"),
+    # '#' then optional blanks then 'if': "#if" or a '#' followed by a blank
+    "c": ("/*", "\\\n", "#if", "# ", "#\t"),
     "ruby": ("=begin", "<<"),
     "shell": ("<<",),
     "yaml": ("|", ">"),
@@ -1110,14 +1112,15 @@ _SH_SOURCE = re.compile(r"^[ \t]*(?:source|\.)[ \t]+['\"]?([\w./-]+)", re.M)
 # routed by lowercased basename (sources/files.py).
 #
 # Dockerfile ontology: base image → import (join-safe stem: last path
-# segment before any ':tag'/'@digest'), `FROM … AS stage` → the stage is
+# segment before any ':tag'/'@digest'; `--platform=…`-style option
+# tokens before it are skipped), `FROM … AS stage` → the stage is
 # a 'class'; ARG/ENV names → 'method' owned by the current stage
 # ('function' before the first FROM — global ARGs).  Instructions are
 # case-insensitive per spec; `#` comment lines cannot match (anchors
 # require the instruction word first).  RUN bodies are shell and are
 # never parsed — no call stream, like the shell grammar.
 _DOCKER_FROM = re.compile(
-    r"^[ \t]*FROM[ \t]+(\S+)(?:[ \t]+AS[ \t]+([\w.-]+))?",
+    r"^[ \t]*FROM[ \t]+(?:--\S+[ \t]+)*(\S+)(?:[ \t]+AS[ \t]+([\w.-]+))?",
     re.M | re.I | re.ASCII,
 )
 _DOCKER_ARGENV = re.compile(

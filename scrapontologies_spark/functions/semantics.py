@@ -314,7 +314,7 @@ def schema_union(
     copy other.  ``required`` = sorted intersection when both sides declare
     it, else whichever side declares it (SURVEY §2.11 M3); ``properties`` and
     ``items`` merge recursively; conflicting ``type`` resolves by fixed
-    most-general-wins precedence (commutative — licenses the tree reduce;
+    most-general-wins precedence (commutative — licenses partial unions;
     conflicts are recorded for the metrics table when a list is passed).
 
     Algebraic contract (property-tested in tests/test_schema_union.py):

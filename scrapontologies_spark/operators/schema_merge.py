@@ -1,93 +1,44 @@
-"""A4/A5 — per-document and global JSON-schema merge.
+"""A5 — global JSON-schema merge, and S5 external-schema merge.
 
 The reference merges page schemas per document with one LLM call
 (pdf_parser.py:418-432) and across documents in ``merge_schemas``
 (extractor.py:193-248).  Deterministic stand-in M3 (schema_union) is
-commutative + associative + idempotent (property-tested), which licenses the
-treeAggregate-style shape mandated by BASELINE.json north_star:
+commutative + associative + idempotent (property-tested), so the global
+reduce may run in any grouping:
 
-  per-partition partial union (mapInPandas, one output row per batch)
-    → groupBy(partial_key % k) partial merge (applyInPandas)
-    → final union of ≤k rows driver-side.
+  per-document union, then per-partition union (both inside the fused
+  extraction kernel, operators/extract.py, which emits one
+  ``schema_partial`` row per partition after its last batch)
+    → JVM filter on ``kind`` + one collect
+    → driver union of the collected partials.
 
-At 100 TB the first level collapses billions of chunk digests to one row per
-scan partition with NO shuffle; only ≤(partitions) tiny rows ever shuffle.
+The driver receives at most #partitions rows, each no larger than the
+global schema itself — no second Python pass and no shuffle.
 """
 
 from __future__ import annotations
 
 import json
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.semantics import canonical_json, schema_union_all
 
-_PARTIAL_SCHEMA = "bucket int, schema_json string"
-_DOC_SCHEMA = "repo string, path string, schema_json string"
 
-
-def document_schemas(chunks: DataFrame) -> DataFrame:
-    """A4 — per-document schema: union of the document's chunk digests.
-    Safe as unordered applyInPandas because M3 is order-independent."""
-
-    def union_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        # NULL schema_json rows (chunks built with with_schemas=False, or a
-        # corrupt row) are skipped like merge_external_schemas does — one
-        # such row must not abort the whole merge job on json.loads(None)
-        merged = schema_union_all(
-            json.loads(s) for s in pdf["schema_json"] if s is not None
-        )
-        return pd.DataFrame(
-            [(pdf["repo"].iloc[0], pdf["path"].iloc[0], canonical_json(merged))],
-            columns=["repo", "path", "schema_json"],
-        )
-
-    return (
-        chunks.select("repo", "path", "schema_json")
-        .groupBy("repo", "path")
-        .applyInPandas(union_group, schema=_DOC_SCHEMA)
+def global_schema(doc_rows: DataFrame) -> dict:
+    """A5 — the global ontology from the tall rows of
+    ``extract_document_rows(with_schemas=True)``: union of the
+    ``schema_partial`` rows.  A NULL ``schema_json`` is skipped, like
+    ``merge_external_schemas`` does."""
+    rows = (
+        doc_rows.filter(F.col("kind") == "schema_partial")
+        .select("schema_json")
+        .collect()
     )
-
-
-def global_schema(chunks: DataFrame, fanin: int = 16) -> dict:
-    """A5 — tree-shaped global ontology reduce over per-chunk digests.
-
-    Level 0 (no shuffle): each input batch → one partial-union row.
-    Level 1 (tiny shuffle of ≤ #partitions rows): groupBy(bucket) union.
-    Level 2 (driver): union of ≤fanin rows.
-    """
-
-    def partial(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            if len(b) == 0:
-                continue
-            merged = schema_union_all(
-                json.loads(s) for s in b["schema_json"] if s is not None
-            )
-            # bucket is assigned downstream from a stable content hash
-            yield pd.DataFrame([(0, canonical_json(merged))], columns=["bucket", "schema_json"])
-
-    def merge_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-        merged = schema_union_all(
-            json.loads(s) for s in pdf["schema_json"] if s is not None
-        )
-        return pd.DataFrame(
-            [(int(pdf["bucket"].iloc[0]), canonical_json(merged))],
-            columns=["bucket", "schema_json"],
-        )
-
-    partials = (
-        chunks.select("schema_json")
-        .mapInPandas(partial, schema=_PARTIAL_SCHEMA)
-        .withColumn("bucket", F.pmod(F.crc32(F.col("schema_json")), F.lit(fanin)).cast("int"))
-        .groupBy("bucket")
-        .applyInPandas(merge_bucket, schema=_PARTIAL_SCHEMA)
+    return schema_union_all(
+        json.loads(r["schema_json"]) for r in rows if r["schema_json"] is not None
     )
-    rows = partials.collect()  # ≤ fanin tiny rows
-    return schema_union_all(json.loads(r["schema_json"]) for r in rows)
 
 
 def merge_external_schemas(global_schema_json: str, external: DataFrame) -> str:

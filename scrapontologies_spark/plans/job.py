@@ -4,7 +4,7 @@ Stage DAG (each boundary = warehouse checkpoint + a manifest marker that
 holds the stage's per-file lineage and metrics, so a killed run resumes
 mid-pipeline with identical output — north_rule):
 
-  corpus → chunks → {triples_raw, doc_entities, doc_schemas, global_schema}
+  corpus → extracted → {triples_raw, doc_entities, doc_schemas, global_schema}
          → entities (modules ∪ symbols, reconciled against any existing
            entities table — the MERGE INTO analog of J1/M6)
          → alias_labels (large-star/small-star CC over import-stem aliases)
@@ -51,6 +51,10 @@ from ..operators.link import reconcile, referential_integrity
 from ..operators.schema_merge import global_schema
 from ..sources.io import StageInfo, Warehouse
 
+# version of the 'extracted' tall-row layout (2: per-partition
+# schema_partial rows); part of that stage's resume token
+_EXTRACTED_ROWS_FORMAT = 2
+
 
 def run_job(
     spark: SparkSession,
@@ -96,7 +100,10 @@ def run_job(
     # - cfg (extraction params): with_schemas changes the 'extracted' rows
     #   themselves (schema rows emitted or not), so it must sit here — a
     #   re-run with the flag flipped would otherwise serve a stale
-    #   'extracted' and yield an empty global schema.
+    #   'extracted' and yield an empty global schema.  'extracted' also
+    #   carries the tall-row format version: a checkpoint from before the
+    #   per-partition schema_partial rows must be rebuilt, not read as an
+    #   empty global schema.
     # - ent_cfg adds the entities_prev state (rows + fingerprint from its
     #   marker): writing or replacing an entities_prev table between runs
     #   changes the reconcile's output, so it must invalidate 'entities'
@@ -130,7 +137,7 @@ def run_job(
             corpus, chunk_bytes, with_schemas,
             allowed_kinds=allowed_kinds, allowed_terms=allowed_terms,
         ),
-        config=cfg,
+        config={**cfg, "rows_format": _EXTRACTED_ROWS_FORMAT},
     )
 
     triples_raw, infos["triples_raw"] = wh.run_stage(
@@ -201,7 +208,7 @@ def run_job(
         )
 
         def build_global() -> DataFrame:
-            g = global_schema(doc_schemas)
+            g = global_schema(extracted)
             return spark.createDataFrame(
                 [("global", canonical_json(g))], "scope string, schema_json string"
             )

@@ -2,10 +2,11 @@
 
 corpus → fused extract (ONE narrow mapInPandas, no shuffle: chunks with
          their mentions, per-doc A2/A3 fold, A4 schema union, M5 triples
-         as tall rows keyed by ``kind``)
+         and one A5 schema partial per partition, as tall rows keyed by
+         ``kind``)
        → views          (JVM-side filters of the tall rows)
        → entities       (module ∪ symbol entities)                [M4]
-       → global schema  (tree reduce of the per-doc schemas)      [A5]
+       → global schema  (driver union of ≤ #partitions partials)  [A5]
 
 ``run_pipeline`` wires them; the resumable job (plans/job.py) checkpoints
 the same views as warehouse stages.  The reference's langgraph node DAGs
@@ -15,7 +16,6 @@ the same views as warehouse stages.  The reference's langgraph node DAGs
 from __future__ import annotations
 
 from dataclasses import dataclass
-from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -39,7 +39,7 @@ from ..operators.schema_merge import global_schema
 
 @dataclass
 class PipelineResult:
-    doc_rows: DataFrame  # the persisted tall output of the fused pass
+    doc_rows: DataFrame  # tall output of the fused pass (cached with schemas)
     chunks: DataFrame
     mentions: DataFrame
     triples: DataFrame
@@ -58,32 +58,26 @@ def run_pipeline(
     emit_chunks: bool = True,
     allowed_kinds=None,
     allowed_terms=None,
-    persist: Optional[bool] = None,
 ) -> PipelineResult:
     """``allowed_kinds``/``allowed_terms``: P8 extraction allowlist — the
     user_prompt_for_filter stand-in, applied at extraction so entities,
     schemas and triples all reflect the restriction.
 
-    ``persist`` (default: only when ``with_schemas``): cache the tall
-    fused-output rows.  The schema path materializes the cache internally
-    and a multi-consumer caller benefits from it, but a single-consumer
-    caller (e.g. a contract query reading one view) would just leak one
-    never-unpersisted cached frame per invocation — callers that keep the
-    cache own unpersisting ``result.doc_rows``."""
-    if persist is None:
-        persist = with_schemas
+    With ``with_schemas`` the tall rows are cached: the global-schema
+    collect runs the extraction once and fills the cache, which the views
+    then read; the caller owns unpersisting ``result.doc_rows``.  Without
+    it nothing runs here, and each view the caller reads is its own pass.
+    """
     # Fused one-pass extraction (see operators/extract.py): every
     # per-document computation is row-local, so chunk/fold/schema/triple
-    # rows all come out of ONE narrow mapInPandas — zero shuffles.  One
-    # Python pass feeds five consumers → cache the tall rows.  At cluster
-    # scale this stage is checkpointed to the warehouse instead
-    # (io.write_stage, partitioned by kind), which also provides resume;
-    # cache is the local-mode equivalent.
+    # rows all come out of ONE narrow mapInPandas — zero shuffles.  At
+    # cluster scale this stage is checkpointed to the warehouse instead
+    # (plans/job.py), which also provides resume.
     doc_rows = extract_document_rows(
         corpus, chunk_bytes, with_schemas, emit_chunks,
         allowed_kinds=allowed_kinds, allowed_terms=allowed_terms,
     )
-    if persist:
+    if with_schemas:
         doc_rows = doc_rows.persist()
 
     # chunk rows are intermediate "page answers"; with emit_chunks=False the
@@ -103,19 +97,7 @@ def run_pipeline(
 
     if with_schemas:
         doc_schemas = doc_schemas_view(doc_rows)
-        # Fill the cache with a single-Python-stage action BEFORE the
-        # global-schema reduce: otherwise the reduce's collect is the first
-        # action and its plan chains the extraction mapInPandas with the
-        # schema-partial mapInPandas in one task pipeline — two Python
-        # runners ping-ponging per task, measured ~4× slower than running
-        # them against the materialized cache (same pathology fixed for
-        # m5 containment via the fused with_containment emit).  With
-        # persist=False there is no cache to fill — the count would be a
-        # full wasted extraction pass before the reduce re-runs it all.
-        if persist:
-            doc_rows.count()
-        # tree-reduce over the (already per-doc-unioned) schema rows
-        gschema = global_schema(doc_schemas)
+        gschema = global_schema(doc_rows)
         gschema_json = canonical_json(gschema)
         schema_ents = schema_to_entities(gschema)
         containment = derive_containment_relations(schema_ents)
@@ -137,52 +119,6 @@ def run_pipeline(
         schema_entities=schema_ents,
         containment_relations=containment,
     )
-
-
-def pipeline_summary(
-    corpus: DataFrame, chunk_bytes: int = 1024
-) -> "tuple[dict, str]":
-    """One-pass deliverables summary: (kind → row count, global schema
-    canonical JSON).
-
-    The fused extraction computes every triple / entity / module / schema
-    row (emit_chunks=False); a CHAINED narrow mapInPandas reduces each Arrow
-    batch to kind-counts plus a partial M3 schema union, and the driver
-    folds the ≤#partitions partials (M3 is commutative/associative/
-    idempotent — the same license as the A5 tree reduce).  Zero shuffles,
-    no cache: this is the scaling bench's measured job, and tests pin its
-    outputs to run_pipeline's."""
-    import json as _json
-    from collections import Counter
-
-    import pandas as pd
-
-    from ..functions.semantics import schema_union_all, schema_union_owned
-
-    doc_rows = extract_document_rows(
-        corpus, chunk_bytes=chunk_bytes, with_schemas=True, emit_chunks=False
-    )
-
-    def reduce_batches(batches):
-        counts: Counter = Counter()
-        schema: dict = {}
-        for b in batches:
-            counts.update(b["kind"].value_counts().to_dict())
-            for s in b.loc[b["kind"] == "schema", "schema_json"]:
-                schema = schema_union_owned(schema, _json.loads(s))
-        yield pd.DataFrame(
-            [(_json.dumps(counts), canonical_json(schema))],
-            columns=["counts_json", "schema_json"],
-        )
-
-    partials = doc_rows.mapInPandas(
-        reduce_batches, "counts_json string, schema_json string"
-    ).collect()
-    counts: Counter = Counter()
-    for r in partials:
-        counts.update(_json.loads(r["counts_json"]))
-    gschema = schema_union_all(_json.loads(r["schema_json"]) for r in partials)
-    return dict(counts), canonical_json(gschema)
 
 
 def verify_content_invariant(corpus: DataFrame, chunks: DataFrame) -> int:

@@ -221,9 +221,9 @@ def main() -> None:
             "No real cluster exists in this sandbox, so the primary measurement "
             "reproduces the rule's exact shape — separate executor processes — "
             "on one box: the identical one-pass KG-construction job "
-            "(fused chunk→extract→fold→schema→triples; tests pin its outputs to "
-            "the staged pipeline) via `spark-submit --py-files`, fresh JVM(s) "
-            "per run.",
+            "(`run_pipeline`: fused chunk→extract→fold→schema→triples; tests pin "
+            "its outputs to the sequential oracle) via `spark-submit --py-files`, "
+            "fresh JVM(s) per run.",
             "",
             f"Corpus: deterministic synthetic, {n_docs:,} documents (input_hint "
             "shape).  Each config runs "
@@ -237,7 +237,8 @@ def main() -> None:
             "own equal data share (weak scaling — at 10^12-file scale every "
             "executor reads its own scan split, and the measured job is "
             "shuffle-free so shares compose exactly; the only cross-executor "
-            "step at cluster scale is the ≤k-row schema tree-reduce fold).",
+            "step at cluster scale is the driver union of the ≤#partitions "
+            "per-partition schema partials).",
             "",
             "| executors | wall (s) | aggregate triples/sec | per-JVM walls (s), all reps |",
             "|---|---|---|---|",

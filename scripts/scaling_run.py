@@ -46,22 +46,22 @@ def main() -> None:
     corpus = spark.read.parquet(corpus_path)
 
     t0 = time.time()
-    # One-pass deliverables measurement: the fused extraction computes every
-    # triple / entity / schema row (emit_chunks=False — chunk rows are
-    # intermediate state, not an output table); a chained narrow
-    # mapInPandas reduces each batch to kind-counts + a partial M3 schema
-    # union, and the driver folds the ≤#partitions partials.  Same outputs
-    # as run_pipeline (counts checked against it in tests), but ZERO
-    # shuffles, no cache, no repeated scans — the wall measures the
-    # pipeline's compute, which is what scales with executors.
+    # Deliverables measurement: run_pipeline's one extraction pass (emit_chunks
+    # =False — chunk rows are intermediate state, not an output table) fills
+    # the cache with its global-schema collect of the ≤#partitions
+    # per-partition partials; the triple and entity counts read the cache.
+    # Zero shuffles in the extraction, no repeated scans — the wall measures
+    # the pipeline's compute, which is what scales with executors.
     import json as _json
 
-    from scrapontologies_spark.plans.pipeline import pipeline_summary
+    from scrapontologies_spark.plans.pipeline import run_pipeline
 
-    counts, gschema_json = pipeline_summary(corpus, chunk_bytes=1024)
-    n_triples = counts.get("triple", 0)
-    n_entities = counts.get("entity", 0) + counts.get("module", 0)
-    assert _json.loads(gschema_json).get("properties"), "global schema must be non-trivial"
+    res = run_pipeline(corpus, chunk_bytes=1024, emit_chunks=False)
+    n_triples = res.triples.count()
+    n_entities = res.entities.count()
+    assert _json.loads(res.global_schema_json).get("properties"), (
+        "global schema must be non-trivial"
+    )
     wall = time.time() - t0
 
     print(

@@ -145,7 +145,7 @@ def test_skew_query_matches_oracle(spark, ddb_skew, skew_dir, name):
 # the suite pins the queries with eager/driver-side or divide-prone
 # stages that could plausibly crash on nothing
 EMPTY_QUERIES = (
-    "kg_global_schema",      # eager treeAggregate-style reduce of 0 rows
+    "kg_global_schema",      # eager global-schema collect of 0 rows
     "sim_cosine_topk_ivf",   # codebook sampled from an empty table
     "text_vocabulary",       # corpus-size N = 0 broadcast, idf divides
     "dedup_clusters",        # CC over zero edges

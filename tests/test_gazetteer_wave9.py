@@ -188,3 +188,36 @@ def test_docker_copy_heredoc_masks():
         ("class", "b", ""),
         ("method", "REAL", "b"),
     ]
+
+
+# ADVICE r05: three reproduced misses, each pinned before its fix
+
+
+def test_shell_here_string_is_not_a_heredoc():
+    """`<<<"word"` is a bash here-string: its `<<"word"` tail must not open
+    a heredoc that masks every later line."""
+    text = (
+        'grep foo <<<"word"\n'
+        "foo() {\n  echo a\n}\n"
+        "bar() {\n  echo b\n}\n"
+    )
+    assert _rows("shell", text) == [("function", "foo", ""), ("function", "bar", "")]
+
+
+def test_docker_from_option_flags_are_skipped():
+    """`FROM --platform=… image AS stage` reads like the flagless line."""
+    flagged = "FROM --platform=$BUILDPLATFORM golang:1.22 AS build\nARG REV\n"
+    expected = [("import", "golang", ""), ("class", "build", ""),
+                ("method", "REV", "build")]
+    assert _rows("docker", flagged) == expected
+    assert _rows("docker", flagged.replace("--platform=$BUILDPLATFORM ", "")) == expected
+
+
+def test_c_if0_with_inner_spaces_is_masked():
+    """`#  if 0` is the same directive as `#if 0`; its body must not leak."""
+    text = (
+        "#  if 0\nint dead(void){ return 0; }\n#endif\n"
+        "int live(void){ return 1; }\n"
+    )
+    assert _rows("c", text) == [("function", "live", "")]
+    assert _rows("c", text.replace("#  if", "#\tif")) == [("function", "live", "")]

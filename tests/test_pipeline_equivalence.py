@@ -100,25 +100,25 @@ def test_containment_relations_from_global_schema(result):
 
 
 def test_containment_triples_per_doc_match_sequential_oracle(spark):
-    """Distributed per-document containment operator == sequential
+    """The kernel's fused per-document containment emit == sequential
     document_schema → M4 → M5(a) oracle, module-rooted."""
     from scrapontologies_spark.functions.semantics import (
         derive_containment_relations,
         schema_to_entities,
     )
     from scrapontologies_spark.operators.extract import (
-        containment_triples_from_doc_schemas,
-        doc_schemas_view,
+        containment_view,
         extract_document_rows,
     )
 
     corpus = corpus_df(spark, 30)
-    doc_rows = extract_document_rows(corpus, 512, with_schemas=True, emit_chunks=False)
+    doc_rows = extract_document_rows(
+        corpus, 512, with_schemas=False, emit_chunks=False,
+        with_entities=False, with_triples=False, with_containment=True,
+    )
     got = {
         (r.subj, r.pred, r.obj, r.rel_type)
-        for r in containment_triples_from_doc_schemas(
-            doc_schemas_view(doc_rows)
-        ).collect()
+        for r in containment_view(doc_rows).collect()
     }
     expected = set()
     for repo, path, commit, lang, content in corpus_rows(30):
@@ -126,39 +126,6 @@ def test_containment_triples_per_doc_match_sequential_oracle(spark):
         for r in derive_containment_relations(ents, root=f"{repo}/{path}"):
             expected.add((r.source, r.name, r.target, r.type))
     assert got == expected and got
-
-
-def test_fused_containment_emit_matches_chained_operator(spark):
-    """extract_document_rows(with_containment=True) — the single-Python-stage
-    fused emit — produces exactly the rows of the chained
-    containment_triples_from_doc_schemas path (which the test above pins to
-    the sequential oracle)."""
-    from scrapontologies_spark.operators.extract import (
-        containment_triples_from_doc_schemas,
-        containment_view,
-        doc_schemas_view,
-        extract_document_rows,
-    )
-
-    corpus = corpus_df(spark, 30)
-    fused = {
-        (r.subj, r.pred, r.obj, r.rel_type)
-        for r in containment_view(
-            extract_document_rows(
-                corpus, 512, with_schemas=False, emit_chunks=False,
-                with_entities=False, with_triples=False, with_containment=True,
-            )
-        ).collect()
-    }
-    chained = {
-        (r.subj, r.pred, r.obj, r.rel_type)
-        for r in containment_triples_from_doc_schemas(
-            doc_schemas_view(
-                extract_document_rows(corpus, 512, with_schemas=True, emit_chunks=False)
-            )
-        ).collect()
-    }
-    assert fused == chained and fused
 
 
 def test_p8_allowlist_restricts_whole_pipeline(spark):
@@ -189,18 +156,6 @@ def test_p8_allowlist_restricts_whole_pipeline(spark):
     res.doc_rows.unpersist()
 
 
-def test_p8_jvm_mention_filter_matches_extraction_filter(spark):
-    """mentions_df's JVM-side isin filter == filtering at extraction."""
-    from scrapontologies_spark.operators.extract import extract_chunks, mentions_df
-
-    corpus = corpus_df(spark, 20)
-    kinds = {"function", "class"}
-    jvm = mentions_df(extract_chunks(corpus, CHUNK_BYTES), allowed_kinds=kinds)
-    at_ext = mentions_df(extract_chunks(corpus, CHUNK_BYTES, allowed_kinds=kinds))
-    assert sorted(map(tuple, jvm.collect())) == sorted(map(tuple, at_ext.collect()))
-    assert jvm.count() > 0
-
-
 def test_emit_selection_schema_only_rows_identical(spark):
     """with_entities=False/with_triples=False must skip the fold and
     triple-set WORK but emit byte-identical schema/module rows."""
@@ -218,7 +173,7 @@ def test_emit_selection_schema_only_rows_identical(spark):
         map(tuple, doc_schemas_view(full).collect())
     )
     kinds = {r.kind for r in slim.select("kind").distinct().collect()}
-    assert kinds == {"schema", "module"}
+    assert kinds == {"schema", "module", "schema_partial"}
 
 
 def test_markdown_rows_produce_no_mentions(result):
@@ -237,20 +192,30 @@ def test_entity_counts(result):
 def test_partitioning_invariance(spark):
     """Layer-4 light: same output under different parallelism (1 vs 8
     shuffle partitions, repartitioned input) — guards the fold's order
-    stability against partitioning (SURVEY §5.4)."""
+    stability and the per-partition schema partials against partitioning
+    (SURVEY §5.4)."""
     rows = corpus_rows(30)
     expected = set()
     for repo, path, commit, lang, content in rows:
         expected.update(document_triples(repo, path, lang, content, CHUNK_BYTES))
+    expected_schema = canonical_json(
+        schema_union_all(
+            document_schema(lang, content, CHUNK_BYTES)
+            for _, _, _, lang, content in rows
+        )
+    )
 
     for parts in (1, 8):
         spark.conf.set("spark.sql.shuffle.partitions", str(parts))
         try:
             corpus = corpus_df(spark, 30).repartition(parts)
-            res = run_pipeline(corpus, chunk_bytes=CHUNK_BYTES, with_schemas=False)
+            res = run_pipeline(corpus, chunk_bytes=CHUNK_BYTES, with_schemas=True)
             got = {(r.subj, r.pred, r.obj, r.rel_type) for r in res.triples.collect()}
             res.doc_rows.unpersist()
             assert got == expected, f"divergence at shuffle.partitions={parts}"
+            assert res.global_schema_json == expected_schema, (
+                f"global schema divergence at {parts} partitions"
+            )
         finally:
             spark.conf.set("spark.sql.shuffle.partitions", "8")
 
@@ -271,18 +236,6 @@ def test_emit_chunks_false_same_deliverables(result, spark):
         assert slim.global_schema_json == full.global_schema_json
     finally:
         slim.doc_rows.unpersist()
-
-
-def test_pipeline_summary_matches_run_pipeline(result):
-    """The scaling bench's one-pass summary must report the same deliverable
-    counts and the same global schema as the staged pipeline."""
-    from scrapontologies_spark.plans.pipeline import pipeline_summary
-
-    corpus, full = result
-    counts, gschema_json = pipeline_summary(corpus, chunk_bytes=CHUNK_BYTES)
-    assert counts["triple"] == full.triples.count()
-    assert counts["entity"] + counts["module"] == full.entities.count()
-    assert gschema_json == full.global_schema_json
 
 
 def test_content_invariant_catches_mixed_sha_rows(spark):
@@ -315,34 +268,6 @@ def test_content_invariant_catches_mixed_sha_rows(spark):
     assert verify_content_invariant(corpus, chunks_ok.limit(0)) == 1
 
 
-def test_staged_fold_matches_fused_doc_entities(spark):
-    """operators/fold.fold_documents (the staged A2/A3 operator for
-    pre-chunked inputs) must produce exactly the fused kernel's
-    doc-entities rows when fed the fused pass's own chunk rows."""
-    from scrapontologies_spark.operators.extract import (
-        chunks_view,
-        doc_entities_view,
-        extract_document_rows,
-    )
-    from scrapontologies_spark.operators.fold import fold_documents
-    from scrapontologies_spark.sources.corpus import corpus_df
-
-    corpus = corpus_df(spark, 24)
-    doc_rows = extract_document_rows(corpus, 512, with_schemas=False).persist()
-    try:
-        fused = {
-            (r.repo, r.path, r.entity_name): (r.entity_type, r.attributes)
-            for r in doc_entities_view(doc_rows).collect()
-        }
-        staged = {
-            (r.repo, r.path, r.entity_name): (r.entity_type, r.attributes)
-            for r in fold_documents(chunks_view(doc_rows)).collect()
-        }
-        assert staged == fused and len(fused) > 0
-    finally:
-        doc_rows.unpersist()
-
-
 def test_null_content_rows_do_not_abort_extraction(spark):
     """One corpus row with content=NULL (an arbitrary --corpus parquet can
     carry one) must not kill the mapInPandas stage after 4 task retries:
@@ -351,7 +276,6 @@ def test_null_content_rows_do_not_abort_extraction(spark):
     import hashlib
 
     from scrapontologies_spark.operators.extract import (
-        extract_chunks,
         extract_document_rows,
         module_entities_view,
         triples_view,
@@ -372,5 +296,3 @@ def test_null_content_rows_do_not_abort_extraction(spark):
     # the good doc still yields its triples
     subs = {r.subj for r in triples_view(rows).collect()}
     assert "r/good.py" in subs
-    # the chunk-only operator takes the same path
-    assert extract_chunks(corpus, 512).count() >= 2

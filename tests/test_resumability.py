@@ -30,13 +30,17 @@ def test_resume_skips_and_matches(spark, corpus, tmp_path):
     wh = Warehouse(resumed_root)
     from scrapontologies_spark.operators.extract import extract_document_rows
 
-    # the 'extracted' stage's token carries extraction parameters ONLY
-    # (with_cc is downstream-only and lives in the cc/triples tokens)
+    from scrapontologies_spark.plans.job import _EXTRACTED_ROWS_FORMAT
+
+    # the 'extracted' stage's token carries extraction parameters and the
+    # tall-row format ONLY (with_cc is downstream-only and lives in the
+    # cc/triples tokens)
     cfg = {
         "chunk_bytes": 512,
         "allowed_kinds": None,
         "allowed_terms": None,
         "with_schemas": True,
+        "rows_format": _EXTRACTED_ROWS_FORMAT,
     }
     wh.run_stage(
         spark, "extracted", lambda: extract_document_rows(corpus, 512), config=cfg
@@ -72,6 +76,38 @@ def test_flag_flip_invalidates_checkpoints(spark, corpus, tmp_path):
     second = run_job(spark, corpus, root, chunk_bytes=512, with_schemas=True)
     assert not second["extracted"].skipped
     assert second["global_schema"].rows > 0
+
+
+def test_extracted_checkpoint_without_schema_partials_is_rebuilt(
+    spark, corpus, tmp_path
+):
+    """An 'extracted' checkpoint in the older row format (no schema_partial
+    rows, token without a format version) must be rebuilt, not served as an
+    empty global schema."""
+    from pyspark.sql import functions as F
+
+    from scrapontologies_spark.operators.extract import extract_document_rows
+
+    clean = run_job(spark, corpus, str(tmp_path / "clean"), chunk_bytes=512)
+    root = str(tmp_path / "old")
+    old_cfg = {
+        "chunk_bytes": 512,
+        "allowed_kinds": None,
+        "allowed_terms": None,
+        "with_schemas": True,
+    }
+    Warehouse(root).run_stage(
+        spark,
+        "extracted",
+        lambda: extract_document_rows(corpus, 512).filter(
+            F.col("kind") != "schema_partial"
+        ),
+        config=old_cfg,
+    )
+    resumed = run_job(spark, corpus, root, chunk_bytes=512)
+    assert not resumed["extracted"].skipped
+    for stage in clean:
+        assert clean[stage].fingerprint == resumed[stage].fingerprint, stage
 
 
 def test_bucketed_tables_join_without_exchange(spark, tmp_path):

@@ -14,7 +14,6 @@ from hypothesis import strategies as st
 from scrapontologies_spark.functions import semantics as S
 from tests.reference_oracle import load_oracle
 
-oracle = load_oracle()
 
 # --- golden merge cases (FIXTURES.md merge_na_cases) -----------------------
 
@@ -52,7 +51,7 @@ MERGE_CASES = [
 @pytest.mark.parametrize("d1,d2", MERGE_CASES)
 def test_merge_matches_reference(d1, d2):
     ours = S.merge_dicts_preferring_non_na(d1, d2)
-    ref = oracle.merge(copy.deepcopy(d1), copy.deepcopy(d2))
+    ref = load_oracle().merge(copy.deepcopy(d1), copy.deepcopy(d2))
     assert ours == ref
 
 
@@ -77,7 +76,7 @@ FOLD_CASES = [
 @pytest.mark.parametrize("dicts", FOLD_CASES)
 def test_fold_matches_reference(dicts):
     ours = S.combine_entities_data(copy.deepcopy(dicts))
-    ref = oracle.combine(copy.deepcopy(dicts))
+    ref = load_oracle().combine(copy.deepcopy(dicts))
     assert ours == ref
 
 
@@ -112,7 +111,7 @@ _dicts = st.dictionaries(st.sampled_from("abcde"), _values, max_size=4)
 @given(_dicts, _dicts)
 def test_merge_property_parity(d1, d2):
     ours = S.merge_dicts_preferring_non_na(d1, d2)
-    ref = oracle.merge(copy.deepcopy(d1), copy.deepcopy(d2))
+    ref = load_oracle().merge(copy.deepcopy(d1), copy.deepcopy(d2))
     assert ours == ref
 
 
@@ -120,7 +119,7 @@ def test_merge_property_parity(d1, d2):
 @given(st.lists(_dicts, max_size=5))
 def test_fold_property_parity(dicts):
     ours = S.combine_entities_data(copy.deepcopy(dicts))
-    ref = oracle.combine(copy.deepcopy(dicts))
+    ref = load_oracle().combine(copy.deepcopy(dicts))
     assert ours == ref
 
 
@@ -149,8 +148,8 @@ FENCE_CASES = [
 
 @pytest.mark.parametrize("s", FENCE_CASES)
 def test_fence_extraction_matches_reference(s):
-    assert S.extract_json_content(s) == oracle.extract_json(s)
-    assert S.extract_python_content(s) == oracle.extract_python(s)
+    assert S.extract_json_content(s) == load_oracle().extract_json(s)
+    assert S.extract_python_content(s) == load_oracle().extract_python(s)
 
 
 # --- A3 page merge → entities ----------------------------------------------
@@ -164,7 +163,7 @@ def test_merge_extracted_pages_entities():
     assert ents[0].type == "object"
     assert ents[0].attributes == {"name": "A", "fee": 3}
     # cross-check the merged dict against the reference fold itself
-    ref = oracle.combine([json.loads(p) for p in pages])
+    ref = load_oracle().combine([json.loads(p) for p in pages])
     assert {e.id: e.attributes for e in ents} == ref
 
 

@@ -1074,25 +1074,21 @@ def test_frame_sample_null_duration_is_visible(spark):
 
 
 def test_schema_merge_skips_null_schema_json(spark):
-    """One NULL schema_json row (chunks built with with_schemas=False, or
-    corruption) must be skipped — not abort the tree-reduce on
-    json.loads(None)."""
-    from scrapontologies_spark.operators.schema_merge import (
-        document_schemas,
-        global_schema,
-    )
+    """A NULL schema_partial row (corruption) must be skipped — not abort
+    the global-schema reduce on json.loads(None); rows of other kinds are
+    not read."""
+    from scrapontologies_spark.operators.schema_merge import global_schema
 
-    chunks = spark.createDataFrame(
+    doc_rows = spark.createDataFrame(
         [
-            ("r", "a.py", '{"properties": {"x": {"type": "string"}}}'),
-            ("r", "a.py", None),
+            ("schema_partial", '{"properties": {"x": {"type": "string"}}}'),
+            ("schema_partial", None),
+            ("schema", '{"properties": {"y": {"type": "string"}}}'),
         ],
-        "repo string, path string, schema_json string",
+        "kind string, schema_json string",
     )
-    docs = document_schemas(chunks).collect()
-    assert len(docs) == 1 and '"x"' in docs[0].schema_json
-    g = global_schema(chunks)
-    assert "x" in g.get("properties", {})
+    g = global_schema(doc_rows)
+    assert set(g.get("properties", {})) == {"x"}
 
 
 def test_pack_sequences_guards_reserved_start_column(spark):
